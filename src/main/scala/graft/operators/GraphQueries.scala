@@ -1487,10 +1487,7 @@ object GraphQueries extends QueryModule {
       // the single-source Brandes dependency pass.
       val sig0 = ringSigma(s, dir)._2.filter(col("seed") === 0L)
         .select("v", "level", "sigma")
-      sig0.join(ringDeltas(s, dir).filter(col("dseed") === 0L),
-          col("v") === col("dv"), "left")
-        .select(col("v"), col("level"), col("sigma"),
-          round(coalesce(col("delta"), lit(0.0)), 4).as("dep"))
+      GraphOps.brandesReadout(sig0, ringDeltas(s, dir).filter(col("dseed") === 0L))
         .orderBy("v")
     }),
 

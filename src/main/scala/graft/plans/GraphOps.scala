@@ -1,7 +1,8 @@
 package graft.plans
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
 
 /** Iterative graph computation on DataFrames.
   *
@@ -19,6 +20,18 @@ import org.apache.spark.sql.functions._
   *    exists in a BSP model, so we implement the declared *intent*: leaves
   *    of a deterministic traversal tree — the min-parent BFS tree — via a
   *    left-anti join (reachable ∖ parents).
+  *
+  * The BFS family is ONE vertex-keyed dataflow per loop shape (the
+  * Pregelix plan: a join/group-by keyed on the state key), parameterised
+  * by the key columns `keys` that ride beside the vertex id: `Nil` for
+  * single-source state `v`, `seed` for multi-source `(seed, v)`, `graph`
+  * for multi-graph `(graph, v)` — the reference's load balancer fanning
+  * BFS across graphs (`load_balancer.c:183-206`). One fused two-hop
+  * superstep ([[expandTwice]]) drives the one BFS loop behind
+  * [[bfsLevels]] / [[multiSourceBfs]] / [[multiGraphBfs]]; one σ-BFS loop
+  * serves [[bfsSigma]] / [[multiSourceBfsSigma]], and one backward sweep
+  * ([[brandesDeltas]]) serves both Brandes passes. The public entry
+  * points only build the initial frame.
   *
   * Scale posture: frontiers and level sets stay distributed (no driver
   * collect); lineage is cut with `localCheckpoint` every superstep so deep
@@ -54,70 +67,97 @@ object GraphOps {
     * inside the gate's intent — and merge-joins otherwise. */
   val FusedHopFanoutAllowance: Long = 8L
 
-  /** One FUSED two-level BFS superstep, exposed for plan-shape tests:
-    * grow the frontier TWO hops along `e` (frontier doubling — hop-2 is
-    * the hop-1 plan re-joined inside the same job, exactness argued at
-    * [[multiGraphExpandTwice]]), then prune already-seen vertices. BOTH
-    * joins are size-gated on the row counts the loop already tracks:
+  /** Broadcast `f` while its row count `n` is under `limit`, else hint a
+    * sort-merge join — the size gate every frontier and seen-set join of
+    * the iterative loops obeys: past it the side is O(|V|), and forcing a
+    * broadcast would ship a multi-GB relation to every executor where a
+    * merge join spills instead. */
+  private def gated(f: DataFrame, n: Long,
+      limit: Long = BroadcastSeenLimit): DataFrame =
+    if (n <= limit) broadcast(f) else f.hint("merge")
+
+  /** One FUSED two-level BFS superstep over state keyed `(keys…, v)` — the
+    * one superstep behind [[bfsLevels]] (`keys = Nil`), [[multiSourceBfs]]
+    * (`seed`) and [[multiGraphBfs]] (`graph`), exposed for plan-shape
+    * tests. The frontier joins the edges on `src` plus every key column
+    * the edge frame carries: `(graph, src)` for multi-graph BFS — a
+    * graph-only key would funnel each whole graph through one task —
+    * while a key the edges lack (`seed`) rides along from the frontier.
+    * With `keys = Nil` it groups and anti-joins on `v` alone, so the
+    * single-source plan carries no constant key column.
+    *
+    * The fusion is classic frontier doubling: hop-1 candidates (frontier
+    * level + 1) and hop-2 candidates (level + 2, the hop-1 plan re-joined
+    * against the edges INSIDE the same job) union into one min-level
+    * group-by and ONE seen anti-join, so each barrier advances TWO BFS
+    * levels — exact, because a vertex at true distance d is unreachable
+    * by any walk shorter than d (labels never undershoot) and its
+    * shortest-path predecessor chain puts a label-exact parent in the
+    * frontier of round ⌈d/2⌉ (the exact label is always among the
+    * candidates the min picks from). Hop-2 re-expands the DEDUPLICATED
+    * not-yet-pruned hop-1 candidate set (min-level per key — loses
+    * nothing, the final group-by takes the min anyway).
+    *
+    * BOTH joins are size-gated on the row counts the loop already tracks:
     *  - the frontier join broadcasts only while `frontierCount` is under
     *    the gate — on a low-diameter scale-free graph the middle BFS level
     *    is O(|V|), which at billions of vertices would be a multi-GB
     *    forced broadcast; past the gate it flips to a sort-merge join on
     *    src, the formulation that spills instead of flooding every
-    *    executor.
+    *    executor. Hop-2's gate carries the [[FusedHopFanoutAllowance]]
+    *    because `frontierCount` is one round stale for it.
     *  - the seen-set anti-join is broadcast only while `seenCount` is under
     *    `broadcastSeenLimit` — past it, seen grows to O(|V|) and the plan
-    *    flips to a sort-merge anti-join (shuffle on v). */
+    *    flips to a sort-merge anti-join (shuffle on the state key). */
   private[graft] def expandTwice(e: DataFrame, f: DataFrame, seen: DataFrame,
-      seenCount: Long, broadcastSeenLimit: Long,
+      keys: Seq[String], seenCount: Long, broadcastSeenLimit: Long,
       frontierCount: Long = 0L): DataFrame = {
+    val sk = keys :+ "v"
     def hop(fr0: DataFrame, gateCount: Long): DataFrame = {
-      val fr = fr0.select(col("v").as("fv"), col("level").as("fl"))
-      val fj = if (gateCount <= broadcastSeenLimit) broadcast(fr)
-               else fr.hint("merge")
-      e.join(fj, e("src") === col("fv"))
-        .select(e("dst").as("v"), (col("fl") + 1).cast("int").as("level"))
+      val fr = fr0.select(keys.map(k => col(k).as(s"f$k")) ++
+        Seq(col("v").as("fv"), col("level").as("fl")): _*)
+      val on = (keys.filter(e.columns.contains).map(k => e(k) === col(s"f$k")) :+
+        (e("src") === col("fv"))).reduce(_ && _)
+      e.join(gated(fr, gateCount, broadcastSeenLimit), on)
+        .select(keys.map(k => col(s"f$k").as(k)) ++
+          Seq(e("dst").as("v"), (col("fl") + 1).cast("int").as("level")): _*)
     }
-    // frontier doubling (see [[multiGraphExpandTwice]] for the exactness
-    // argument): hop-1 and hop-2 candidates union into one min-level
-    // group-by and ONE seen anti-join, so each barrier advances two
-    // levels. Hop-2's probe is hop-1 DEDUPLICATED (min-level per vertex —
-    // loses nothing, the final group-by takes the min anyway) and its
-    // broadcast gate carries the [[FusedHopFanoutAllowance]] because
-    // frontierCount is one round stale for it.
     val hop1 = hop(f, frontierCount)
-      .groupBy("v").agg(min("level").as("level"))
+      .groupBy(sk.head, sk.tail: _*).agg(min("level").as("level"))
     val cand = hop1
       .union(hop(hop1, frontierCount * FusedHopFanoutAllowance))
-      .groupBy("v").agg(min("level").as("level"))
-    if (seenCount <= broadcastSeenLimit)
-      cand.join(broadcast(seen.select("v")), Seq("v"), "left_anti")
-    else cand.join(seen.select("v").hint("merge"), Seq("v"), "left_anti")
+      .groupBy(sk.head, sk.tail: _*).agg(min("level").as("level"))
+    cand.join(gated(seen.select(sk.map(col): _*), seenCount, broadcastSeenLimit),
+      sk, "left_anti")
   }
 
-  /** BFS levels from `start` over `edges(src: long, dst: long)`.
-    * Returns `(v: long, level: int)` for every reachable vertex.
+  /** The BFS loop behind [[bfsLevels]], [[multiSourceBfs]] and
+    * [[multiGraphBfs]]: levels from the `(keys…, v, level)` frame `init`
+    * of `initCount` rows (passed in, so the single-source path pays no
+    * extra count job), keyed `(keys…, v)`. `edges` is `(src, dst)` plus
+    * any key columns it carries. Returns `(keys…, v, level)` for every
+    * vertex reachable from a start row of its key.
+    *
+    * ONE materialization + ONE count per TWO BFS levels (the fused
+    * superstep of [[expandTwice]]) — the loop's cost is barrier-bound, so
+    * halving the barrier count is the lever that matters. The count()
+    * reads the just-checkpointed frontier (cached RDD, no recompute) — it
+    * is the BSP termination check, the running seen-set size, AND the
+    * frontier size that drive the broadcast→shuffle flips.
     */
-  def bfsLevels(spark: SparkSession, edges: DataFrame, start: Long, maxIter: Int = 50,
-      broadcastSeenLimit: Long = BroadcastSeenLimit): DataFrame = {
-    import spark.implicits._
-    val e = edges.select(col("src").cast("long"), col("dst").cast("long"))
-      .persist()
-    var levels = Seq((start, 0)).toDF("v", "level")
-    var frontier = levels
-    var seenCount = 1L
-    var frontierCount = 1L
+  private def bfsLoop(edges: DataFrame, keys: Seq[String], init: DataFrame,
+      initCount: Long, maxIter: Int): DataFrame = {
+    val e = edges.select(keys.filter(edges.columns.contains).map(col) ++
+      Seq(col("src").cast("long"), col("dst").cast("long")): _*).persist()
+    var levels = init
+    var frontier = init
+    var seenCount = initCount
+    var frontierCount = initCount
     var i = 0
     var done = false
-    // ONE materialization + ONE count per TWO BFS levels (the fused
-    // two-hop superstep of expandTwice — frontier doubling, exactness
-    // argued at [[multiGraphExpandTwice]]). The count() reads the
-    // just-checkpointed frontier (cached RDD, no recompute) — it is the
-    // BSP termination check, the running seen-set size, AND the frontier
-    // size that drive the broadcast→shuffle flips.
     while (i < maxIter && !done) {
-      val next = expandTwice(e, frontier, levels, seenCount,
-        broadcastSeenLimit, frontierCount).localCheckpoint(true)
+      val next = expandTwice(e, frontier, levels, keys, seenCount,
+        BroadcastSeenLimit, frontierCount).localCheckpoint(true)
       val n = next.count()
       if (n == 0) done = true
       else {
@@ -137,112 +177,30 @@ object GraphOps {
     levels
   }
 
+  /** BFS levels from `start` over `edges(src: long, dst: long)`.
+    * Returns `(v: long, level: int)` for every reachable vertex.
+    */
+  def bfsLevels(spark: SparkSession, edges: DataFrame, start: Long,
+      maxIter: Int = 50): DataFrame = {
+    import spark.implicits._
+    bfsLoop(edges, Nil, Seq((start, 0)).toDF("v", "level"), 1L, maxIter)
+  }
+
   /** Multi-source BFS: levels from EVERY seed in one iterative loop, state
     * keyed `(seed, v)`. This is the batching that makes per-source graph
     * analytics (closeness/betweenness centrality over a seed sample) scale:
     * one superstep advances ALL sources' frontiers with a single
     * frontier⋈edges join — s sources cost one loop of depth max-diameter,
     * not s sequential loops — and the (seed, v) key spreads the shuffle
-    * across sources so no single-source hotspot forms. Same fused
-    * two-levels-per-barrier superstep and broadcast→shuffle seen-set gate
-    * as [[bfsLevels]].
+    * across sources so no single-source hotspot forms. Same loop as
+    * [[bfsLevels]] with the seed riding the state key.
     * Returns `(seed, v, level)` for every vertex reachable from each seed.
     */
   def multiSourceBfs(spark: SparkSession, edges: DataFrame, seeds: Seq[Long],
-      maxIter: Int = 50, broadcastSeenLimit: Long = BroadcastSeenLimit): DataFrame = {
+      maxIter: Int = 50): DataFrame = {
     import spark.implicits._
-    val e = edges.select(col("src").cast("long"), col("dst").cast("long"))
-      .persist()
-    var levels = seeds.map(s => (s, s, 0)).toDF("seed", "v", "level")
-    var frontier = levels
-    var seenCount = seeds.size.toLong
-    var frontierCount = seeds.size.toLong
-    // the same fused two-level superstep as [[expandTwice]], with the
-    // seed riding the state key (one min-level group-by + one seen
-    // anti-join per TWO levels)
-    def expandTwiceSeeded(f: DataFrame, seen: DataFrame): DataFrame = {
-      def hop(fr0: DataFrame, gateCount: Long): DataFrame = {
-        val fr = fr0.select(col("seed").as("fs"), col("v").as("fv"),
-          col("level").as("fl"))
-        val fj = if (gateCount <= broadcastSeenLimit) broadcast(fr)
-                 else fr.hint("merge")
-        e.join(fj, e("src") === col("fv"))
-          .select(col("fs").as("seed"), e("dst").as("v"),
-            (col("fl") + 1).cast("int").as("level"))
-      }
-      // hop-2 probes the DEDUPED hop-1 candidates under the stale-count
-      // fan-out allowance (see [[FusedHopFanoutAllowance]])
-      val hop1 = hop(f, frontierCount)
-        .groupBy("seed", "v").agg(min("level").as("level"))
-      val cand = hop1
-        .union(hop(hop1, frontierCount * FusedHopFanoutAllowance))
-        .groupBy("seed", "v").agg(min("level").as("level"))
-      val pruned =
-        if (seenCount <= broadcastSeenLimit)
-          cand.join(broadcast(seen.select("seed", "v")), Seq("seed", "v"), "left_anti")
-        else cand.join(seen.select("seed", "v").hint("merge"), Seq("seed", "v"), "left_anti")
-      pruned.localCheckpoint(true)
-    }
-    var i = 0
-    var done = false
-    while (i < maxIter && !done) {
-      val next = expandTwiceSeeded(frontier, levels)
-      val n = next.count()
-      if (n == 0) done = true
-      else {
-        seenCount += n
-        frontierCount = n
-        val u = levels.union(next)
-        levels = if (i % 4 >= 2) u.localCheckpoint(true) else u
-        frontier = next
-      }
-      i += 2
-    }
-    e.unpersist()
-    levels
-  }
-
-  /** One FUSED two-level [[multiGraphBfs]] superstep, exposed (like
-    * [[expandTwice]]) so ScaleSpec can assert the scale invariants
-    * directly: the frontier join keys on BOTH (graph, src) — a graph-only
-    * key would funnel each whole graph through one task — and both the
-    * frontier and seen-set joins flip broadcast → shuffle past the size
-    * gate. The fusion is classic frontier doubling: hop-1 candidates
-    * (frontier level + 1) and hop-2 candidates (level + 2, the hop-1
-    * plan re-joined against the edges INSIDE the same job) union into one
-    * min-level group-by and ONE seen anti-join, so each barrier advances
-    * TWO BFS levels — exact, because a vertex at true distance d is
-    * unreachable by any walk shorter than d (labels never undershoot) and
-    * its shortest-path predecessor chain puts a label-exact parent in the
-    * frontier of round ⌈d/2⌉ (the exact label is always among the
-    * candidates the min picks from). Hop-2 re-expands the DEDUPLICATED
-    * not-yet-pruned hop-1 candidate set under the
-    * [[FusedHopFanoutAllowance]] broadcast gate — the price of halving
-    * the barrier count, cheap next to a materialization at every
-    * level. */
-  private[graft] def multiGraphExpandTwice(e: DataFrame, f: DataFrame,
-      seen: DataFrame, seenCount: Long, broadcastSeenLimit: Long,
-      frontierCount: Long): DataFrame = {
-    def hop(fr0: DataFrame, gateCount: Long): DataFrame = {
-      val fr = fr0.select(col("graph").as("fg"), col("v").as("fv"),
-        col("level").as("fl"))
-      val fj = if (gateCount <= broadcastSeenLimit) broadcast(fr)
-               else fr.hint("merge")
-      e.join(fj, e("graph") === col("fg") && e("src") === col("fv"))
-        .select(e("graph"), e("dst").as("v"),
-          (col("fl") + 1).cast("int").as("level"))
-    }
-    // hop-2 probes the DEDUPED hop-1 candidates under the stale-count
-    // fan-out allowance (see [[FusedHopFanoutAllowance]])
-    val hop1 = hop(f, frontierCount)
-      .groupBy("graph", "v").agg(min("level").as("level"))
-    val cand = hop1
-      .union(hop(hop1, frontierCount * FusedHopFanoutAllowance))
-      .groupBy("graph", "v").agg(min("level").as("level"))
-    if (seenCount <= broadcastSeenLimit)
-      cand.join(broadcast(seen.select("graph", "v")), Seq("graph", "v"), "left_anti")
-    else
-      cand.join(seen.select("graph", "v").hint("merge"), Seq("graph", "v"), "left_anti")
+    bfsLoop(edges, Seq("seed"), seeds.map(s => (s, s, 0)).toDF("seed", "v", "level"),
+      seeds.size.toLong, maxIter)
   }
 
   /** Per-graph BFS levels for EVERY graph in ONE BSP job — the scale
@@ -263,37 +221,11 @@ object GraphOps {
     * within its graph.
     */
   def multiGraphBfs(spark: SparkSession, edges: DataFrame, start: Long,
-      maxIter: Int = 50, broadcastSeenLimit: Long = BroadcastSeenLimit): DataFrame = {
-    val e = edges.select(col("graph"),
-      col("src").cast("long"), col("dst").cast("long")).persist()
-    var levels = e.select("graph").distinct()
+      maxIter: Int = 50): DataFrame = {
+    val init = edges.select("graph").distinct()
       .select(col("graph"), lit(start).as("v"), lit(0).as("level"))
       .localCheckpoint(true)
-    var frontier = levels
-    var seenCount = levels.count()
-    var frontierCount = seenCount
-    var i = 0
-    var done = false
-    // ONE materialization + ONE count per TWO BFS levels (the fused
-    // two-hop superstep) — the loop's cost is barrier-bound, so halving
-    // the barrier count is the lever that matters at local[32] and on a
-    // real cluster alike.
-    while (i < maxIter && !done) {
-      val next = multiGraphExpandTwice(e, frontier, levels, seenCount,
-        broadcastSeenLimit, frontierCount).localCheckpoint(true)
-      val n = next.count()
-      if (n == 0) done = true
-      else {
-        seenCount += n
-        frontierCount = n
-        val u = levels.union(next)
-        levels = if (i % 4 >= 2) u.localCheckpoint(true) else u
-        frontier = next
-      }
-      i += 2
-    }
-    e.unpersist()
-    levels
+    bfsLoop(edges, Seq("graph"), init, init.count(), maxIter)
   }
 
   /** BFS levels via GraphX Pregel — the alternate formulation of
@@ -466,48 +398,11 @@ object GraphOps {
     * sampled (multi-source) betweenness at scale.
     */
   private[graft] def multiSourceBfsSigma(spark: SparkSession, edges: DataFrame,
-      seeds: Seq[Long], maxIter: Int = 50,
-      broadcastSeenLimit: Long = BroadcastSeenLimit): DataFrame = {
+      seeds: Seq[Long], maxIter: Int = 50): DataFrame = {
     import spark.implicits._
-    val e = edges.select(col("src").cast("long"), col("dst").cast("long"))
-      .persist()
-    var levels = seeds.map(s => (s, s, 0, 1L)).toDF("seed", "v", "level", "sigma")
-    var frontier = levels
-    var seenCount = seeds.size.toLong
-    var frontierCount = seeds.size.toLong
-    def expand(f: DataFrame, seen: DataFrame, level: Int): DataFrame = {
-      val fj = if (frontierCount <= broadcastSeenLimit) broadcast(f) else f.hint("merge")
-      val grown = e.join(fj, f("v") === e("src"))
-        .groupBy(col("seed"), e("dst").as("v")).agg(sum(f("sigma")).as("sigma"))
-      val pruned =
-        if (seenCount <= broadcastSeenLimit)
-          grown.join(broadcast(seen.select("seed", "v")), Seq("seed", "v"), "left_anti")
-        else grown.join(seen.select("seed", "v").hint("merge"), Seq("seed", "v"), "left_anti")
-      pruned.select(col("seed"), col("v"), lit(level).as("level"), col("sigma"))
-        .localCheckpoint(true)
-    }
-    var i = 0
-    var done = false
-    while (i < maxIter && !done) {
-      val next1 = expand(frontier, levels, i + 1)
-      val n1 = next1.count()
-      if (n1 == 0) done = true
-      else {
-        seenCount += n1
-        frontierCount = n1
-        val seen1 = levels.union(next1)
-        val next2 = expand(next1, seen1, i + 2)
-        val n2 = next2.count()
-        seenCount += n2
-        frontierCount = n2
-        val u = seen1.union(next2)
-        levels = if (i % 4 >= 2) u.localCheckpoint(true) else u
-        if (n2 == 0) done = true else frontier = next2
-      }
-      i += 2
-    }
-    e.unpersist()
-    levels
+    sigmaLoop(edges, Seq("seed"),
+      seeds.map(s => (s, s, 0, 1L)).toDF("seed", "v", "level", "sigma"),
+      seeds.size.toLong, maxIter)
   }
 
   /** Sampled betweenness centrality: Brandes' dependency accumulation run
@@ -527,55 +422,22 @@ object GraphOps {
     val ed = edges.select(col("src").cast("long"), col("dst").cast("long"))
       .distinct().localCheckpoint(true)
     val sigAll = multiSourceBfsSigma(spark, ed, seeds, maxIter).localCheckpoint(true)
-    multiBrandesBackward(spark, ed, sigAll)
+    multiBrandesFinal(sigAll, multiBrandesDeltas(spark, ed, sigAll))
   }
 
-  /** The backward (dependency-accumulation) half of [[multiSourceBrandes]],
-    * callable with a PRECOMPUTED `(seed, v, level, sigma)` frame — the
-    * forward σ-BFS is the expensive shared half, so a caller that already
-    * has it (e.g. a process-level cache shared with the single-source
-    * query, whose σ frame is the seed-0 slice of this one) pays only the
-    * per-level sweep here. `ed` must be the DISTINCT long-cast edges the
-    * σ frame was computed over. */
-  /** Per-(seed, vertex) dependency deltas of the batched backward sweep —
-    * the shared intermediate BOTH betweenness queries consume: the multi
-    * query aggregates it over seeds ([[multiBrandesFinal]]), the
-    * single-source query reads its seed-0 slice (per-seed recursion is
-    * independent, so the slice IS the single-source sweep). */
+  /** Per-(seed, vertex) dependency deltas `(dseed, dv, delta)` of the
+    * batched backward sweep ([[brandesDeltas]] keyed on `seed`) over a
+    * PRECOMPUTED `(seed, v, level, sigma)` frame — the shared intermediate
+    * BOTH betweenness queries consume: the multi query aggregates it over
+    * seeds ([[multiBrandesFinal]]), the single-source query reads its
+    * seed-0 slice (per-seed recursion is independent, so the slice IS the
+    * single-source sweep). The forward σ-BFS is the expensive shared half,
+    * so a caller that already has it (e.g. a process-level cache) pays
+    * only the per-level sweep here. `ed` must be the DISTINCT long-cast
+    * edges the σ frame was computed over. */
   private[graft] def multiBrandesDeltas(spark: SparkSession, ed: DataFrame,
-      sigAll: DataFrame): DataFrame = {
-    import spark.implicits._
-    val maxL = sigAll.agg(max("level")).collect()(0).getInt(0)
-    // Annotate each seed's Brandes DAG once (edge (x,w) with level(w) =
-    // level(x)+1 under that seed), exactly like the single-source sweep.
-    val dagEdges = ed
-      .join(sigAll.select(col("seed"), col("v").as("xv"),
-        col("level").as("xlevel"), col("sigma").as("xsigma")), col("src") === col("xv"))
-      .join(sigAll.select(col("seed").as("wseed"), col("v").as("wv"),
-        col("level").as("wlevel"), col("sigma").as("wsigma")),
-        col("seed") === col("wseed") && col("dst") === col("wv") &&
-          col("wlevel") === col("xlevel") + 1)
-      .select(col("seed"), col("src"), col("dst"), col("xlevel"),
-        col("xsigma"), col("wsigma"))
-      .localCheckpoint(true)
-    var delPrev = Seq.empty[(Long, Long, Double)].toDF("dseed", "dv", "delta")
-    var dels = List.empty[DataFrame]
-    for (l <- (maxL - 1) to 0 by -1) {
-      val cur0 = dagEdges.filter(col("xlevel") === l)
-        .join(delPrev, col("seed") === col("dseed") && col("dst") === col("dv"), "left")
-        .groupBy(col("seed"), col("src"))
-        .agg(sum(col("xsigma").cast("double") / col("wsigma").cast("double") *
-          (lit(1.0) + coalesce(col("delta"), lit(0.0)))).as("delta"))
-        .select(col("seed").as("dseed"), col("src").as("dv"), col("delta"))
-      val cur = if (l % 3 == 0 || l == 0) cur0.localCheckpoint(true) else cur0
-      dels ::= cur
-      delPrev = cur
-    }
-    dels match {
-      case Nil => delPrev
-      case ds  => ds.reduce(_ union _)
-    }
-  }
+      sigAll: DataFrame): DataFrame =
+    brandesDeltas(spark, ed, sigAll, Seq("seed"))
 
   /** Sampled-betweenness readout over [[multiBrandesDeltas]]' output:
     * Σ_seeds δ_s(v), each source's own row excluded, rounded e4
@@ -587,10 +449,6 @@ object GraphOps {
         .groupBy(col("dv")).agg(sum("delta").as("bc")),
         col("v") === col("dv"), "left")
       .select(col("v"), round(coalesce(col("bc"), lit(0.0)), 4).as("bc"))
-
-  private[graft] def multiBrandesBackward(spark: SparkSession, ed: DataFrame,
-      sigAll: DataFrame): DataFrame =
-    multiBrandesFinal(sigAll, multiBrandesDeltas(spark, ed, sigAll))
 
   /** Longest-path layering of a DAG — the topological-depth assignment a
     * DAG scheduler (build system, lineage planner, workflow engine) uses:
@@ -610,7 +468,6 @@ object GraphOps {
     * the work below that size. Returns `(v, layer)` for every vertex.
     */
   def dagLayers(spark: SparkSession, edges: DataFrame, maxIter: Int = 100,
-      broadcastSeenLimit: Long = BroadcastSeenLimit,
       driverSolveLimit: Long = DriverSolveEdgeLimit): DataFrame = {
     val e = edges.select(col("src").cast("long"), col("dst").cast("long"))
       .persist()
@@ -668,8 +525,6 @@ object GraphOps {
     // source waves over the live checkpoints. Cycle detection is exact:
     // if no vertex peeled this round (remaining unchanged), every
     // remaining vertex lies on or behind a cycle — throw, never truncate.
-    def gated(f: DataFrame, n: Long): DataFrame =
-      if (n <= broadcastSeenLimit) broadcast(f) else f.hint("merge")
     // One peel round: wave = in-degree-0 rows of `cur`; returns the
     // updated in-degree table with the wave removed and its out-edge
     // counts subtracted. `remaining` upper-bounds |wave| for the
@@ -844,8 +699,8 @@ object GraphOps {
     * one frontier⋈edges join + a min-merge, not a full |V| relaxation.
     * Returns `(v, dist)` for every vertex reachable from `start`.
     */
-  def sssp(spark: SparkSession, edges: DataFrame, start: Long, maxIter: Int = 100,
-      broadcastSeenLimit: Long = BroadcastSeenLimit): DataFrame = {
+  def sssp(spark: SparkSession, edges: DataFrame, start: Long,
+      maxIter: Int = 100): DataFrame = {
     import spark.implicits._
     val e = edges.select(col("src").cast("long"), col("dst").cast("long"),
       col("w").cast("long")).persist()
@@ -871,10 +726,8 @@ object GraphOps {
       // hop count of shortest paths, the loop's entire cost at local[32]).
       def hop(fr: DataFrame, gateCount: Long): DataFrame = {
         val f2 = fr.select(col("v").as("hv"), col("nd").as("hd"))
-        val fj = if (gateCount <= broadcastSeenLimit) broadcast(f2)
-                 else f2.hint("merge")
         e.select(col("src").as("hsrc"), col("dst").as("hdst"), col("w").as("hw"))
-          .join(fj, col("hv") === col("hsrc"))
+          .join(gated(f2, gateCount), col("hv") === col("hsrc"))
           .select(col("hdst").as("v"), (col("hd") + col("hw")).as("nd"))
           .groupBy("v").agg(min("nd").as("nd"))
       }
@@ -907,38 +760,48 @@ object GraphOps {
     * vertex — i.e. the whole frontier. So the frontier⋈edges join that BFS
     * already pays yields σ for free as `sum(predecessor σ)` grouped by
     * destination, and the separate forward sweep Brandes would otherwise
-    * run (maxL more per-level joins + barriers) disappears. Same two-hop
-    * batching and broadcast→shuffle seen-set gate as [[bfsLevels]].
+    * run (maxL more per-level joins + barriers) disappears.
     * Requires DISTINCT edges (parallel edges would double-count paths).
     * Returns `(v, level, sigma)` for every reachable vertex.
     */
   private[graft] def bfsSigma(spark: SparkSession, edges: DataFrame, start: Long,
-      maxIter: Int = 50, broadcastSeenLimit: Long = BroadcastSeenLimit): DataFrame = {
+      maxIter: Int = 50): DataFrame = {
     import spark.implicits._
+    sigmaLoop(edges, Nil, Seq((start, 0, 1L)).toDF("v", "level", "sigma"), 1L, maxIter)
+  }
+
+  /** The σ-BFS loop behind [[bfsSigma]] (`keys = Nil`) and
+    * [[multiSourceBfsSigma]] (`seed`): levels and path counts from the
+    * `(keys…, v, level, sigma)` frame `init` of `initCount` rows, state
+    * keyed `(keys…, v)`, with the broadcast→shuffle frontier and seen-set
+    * gates of [[expandTwice]]. Two levels per loop round, one
+    * materialization + count per level (σ sums cannot be fused across
+    * hops the way min-levels can).
+    *
+    * Each frontier is eagerly localCheckpoint'ed. persist() alone is NOT
+    * enough here: a cached plan keeps its full logical lineage, and
+    * because each frontier's anti-join embeds the whole accumulated
+    * `levels` union, the un-truncated plan tree grows geometrically with
+    * depth until AQE's plan stringification alone OOMs (observed at
+    * sf0.1). The checkpoint cuts the plan at every superstep, so `levels`
+    * stays a flat union of checkpointed frontiers.
+    */
+  private def sigmaLoop(edges: DataFrame, keys: Seq[String], init: DataFrame,
+      initCount: Long, maxIter: Int): DataFrame = {
     val e = edges.select(col("src").cast("long"), col("dst").cast("long"))
       .persist()
-    var levels = Seq((start, 0, 1L)).toDF("v", "level", "sigma")
-    var frontier = levels
-    var seenCount = 1L
-    var frontierCount = 1L
-    // Each frontier is eagerly localCheckpoint'ed, exactly like
-    // [[bfsLevels]]. persist() alone is NOT enough here: a cached plan keeps
-    // its full logical lineage, and because each frontier's anti-join embeds
-    // the whole accumulated `levels` union, the un-truncated plan tree grows
-    // geometrically with depth until AQE's plan stringification alone OOMs
-    // (observed at sf0.1). The checkpoint cuts the plan at every superstep,
-    // so `levels` stays a flat union of checkpointed frontiers.
-    def expand(f: DataFrame, seen: DataFrame, level: Int): DataFrame = {
-      val fj = if (frontierCount <= broadcastSeenLimit) broadcast(f) else f.hint("merge")
-      val grown = e.join(fj, f("v") === e("src"))
-        .groupBy(e("dst").as("v")).agg(sum(f("sigma")).as("sigma"))
-      val pruned =
-        if (seenCount <= broadcastSeenLimit)
-          grown.join(broadcast(seen.select("v")), Seq("v"), "left_anti")
-        else grown.join(seen.select("v").hint("merge"), Seq("v"), "left_anti")
-      pruned.select(col("v"), lit(level).as("level"), col("sigma"))
+    val sk = keys :+ "v"
+    var levels = init
+    var frontier = init
+    var seenCount = initCount
+    var frontierCount = initCount
+    def expand(f: DataFrame, seen: DataFrame, level: Int): DataFrame =
+      e.join(gated(f, frontierCount), f("v") === e("src"))
+        .groupBy(keys.map(col) :+ e("dst").as("v"): _*)
+        .agg(sum(f("sigma")).as("sigma"))
+        .join(gated(seen.select(sk.map(col): _*), seenCount), sk, "left_anti")
+        .select(sk.map(col) ++ Seq(lit(level).as("level"), col("sigma")): _*)
         .localCheckpoint(true)
-    }
     var i = 0
     var done = false
     while (i < maxIter && !done) {
@@ -973,7 +836,7 @@ object GraphOps {
     * over the same fixed level cap).
     *
     * Returns `(v, level, sigma, dep)` for every vertex reachable from
-    * `start`, dep rounded to 6 dp (δ sums doubles — last-ulp summation
+    * `start`, dep rounded to 4 dp (δ sums doubles — last-ulp summation
     * order must not leak into the compare).
     *
     * Scale shape: both sweeps are per-level joins keyed on vertex id —
@@ -988,52 +851,70 @@ object GraphOps {
     // of the frontier⋈edges join BFS already pays, so the classic separate
     // forward sweep (maxL more per-level joins and their barriers) is gone.
     val sigAll = bfsSigma(spark, ed, start, maxIter).localCheckpoint(true)
-    brandesBackward(spark, ed, sigAll)
+    brandesReadout(sigAll, brandesDeltas(spark, ed, sigAll, Nil))
   }
 
-  /** Single-source backward sweep over a precomputed `(v, level, sigma)`
-    * frame — see [[multiBrandesBackward]] for why this is split out. */
-  private[graft] def brandesBackward(spark: SparkSession, ed: DataFrame,
-      sigAll: DataFrame): DataFrame = {
-    import spark.implicits._
+  /** The Brandes backward (dependency-accumulation) sweep over a
+    * precomputed σ frame `(keys…, v, level, sigma)`: returns
+    * `(dkeys…, dv, delta)` (each key column renamed `d<key>`) for every
+    * vertex with a successor in its key's Brandes DAG. With `keys = Nil`
+    * it is the single-source sweep of [[brandesDependency]]; keyed on
+    * `seed` it processes level l of EVERY seed's DAG in the same per-level
+    * join ([[multiBrandesDeltas]]). `ed` must be the DISTINCT long-cast
+    * edges the σ frame was computed over. */
+  private[graft] def brandesDeltas(spark: SparkSession, ed: DataFrame,
+      sigAll: DataFrame, keys: Seq[String]): DataFrame = {
     val maxL = sigAll.agg(max("level")).collect()(0).getInt(0)
-    // backward sweep: dependency accumulation up the DAG. The σ context is
-    // joined ONCE up front — DAG edges (wlevel == srclevel + 1) annotated
-    // with both endpoint σs and the source level — so each level of the
-    // sweep is a single join against the previous level's δ instead of
-    // re-joining levels/edges/σ/σ every superstep (4 joins → 1 per level;
-    // the annotated edge set is exactly the Brandes DAG, nothing larger).
+    // The σ context is joined ONCE up front — DAG edges (wlevel ==
+    // xlevel + 1 under the same key) annotated with both endpoint σs and
+    // the source level — so each level of the sweep is a single join
+    // against the previous level's δ instead of re-joining
+    // levels/edges/σ/σ every superstep (4 joins → 1 per level; the
+    // annotated edge set is exactly the Brandes DAG, nothing larger).
     val dagEdges = ed
-      .join(sigAll.select(col("v").as("xv"), col("level").as("xlevel"),
-        col("sigma").as("xsigma")), col("src") === col("xv"))
-      .join(sigAll.select(col("v").as("wv"), col("level").as("wlevel"),
-        col("sigma").as("wsigma")), col("dst") === col("wv") &&
-        col("wlevel") === col("xlevel") + 1)
-      .select(col("src"), col("dst"), col("xlevel"), col("xsigma"), col("wsigma"))
+      .join(sigAll.select(keys.map(col) ++ Seq(col("v").as("xv"),
+        col("level").as("xlevel"), col("sigma").as("xsigma")): _*),
+        col("src") === col("xv"))
+      .join(sigAll.select(keys.map(k => col(k).as(s"w$k")) ++ Seq(col("v").as("wv"),
+        col("level").as("wlevel"), col("sigma").as("wsigma")): _*),
+        (keys.map(k => col(k) === col(s"w$k")) ++ Seq(col("dst") === col("wv"),
+          col("wlevel") === col("xlevel") + 1)).reduce(_ && _))
+      .select(keys.map(col) ++ Seq(col("src"), col("dst"), col("xlevel"),
+        col("xsigma"), col("wsigma")): _*)
       .localCheckpoint(true)
-    var delPrev = Seq.empty[(Long, Double)].toDF("dv", "delta") // level maxL has no successors
+    // level maxL has no successors: the sweep starts from an empty δ frame
+    var delPrev = spark.createDataFrame(java.util.List.of[Row](),
+      StructType((keys.map(k => s"d$k") :+ "dv").map(StructField(_, LongType)) :+
+        StructField("delta", DoubleType)))
     var dels = List.empty[DataFrame]
     for (l <- (maxL - 1) to 0 by -1) {
       val cur0 = dagEdges.filter(col("xlevel") === l)
-        .join(delPrev, col("dst") === col("dv"), "left")
-        .groupBy(col("src").as("v"))
+        .join(delPrev, (keys.map(k => col(k) === col(s"d$k")) :+
+          (col("dst") === col("dv"))).reduce(_ && _), "left")
+        .groupBy(keys.map(col) :+ col("src"): _*)
         .agg(sum(col("xsigma").cast("double") / col("wsigma").cast("double") *
           (lit(1.0) + coalesce(col("delta"), lit(0.0)))).as("delta"))
-        .select(col("v").as("dv"), col("delta"))
-      // Same every-3rd-barrier policy as the forward sweep; cur is consumed
-      // twice (next level + final union) so the lazy window stays ≤3 deep.
+        .select(keys.map(k => col(k).as(s"d$k")) ++
+          Seq(col("src").as("dv"), col("delta")): _*)
+      // Checkpoint every 3rd level; cur is consumed twice (next level +
+      // final union) so the lazy window stays ≤3 deep.
       val cur = if (l % 3 == 0 || l == 0) cur0.localCheckpoint(true) else cur0
       dels ::= cur
       delPrev = cur
     }
-    val delAll = dels match {
+    dels match {
       case Nil => delPrev
       case ds  => ds.reduce(_ union _)
     }
-    sigAll.join(delAll, col("v") === col("dv"), "left")
+  }
+
+  /** Single-source dependency readout shared by [[brandesDependency]] and
+    * `q_graph_betweenness`: the σ frame `(v, level, sigma)` left-joined
+    * with its δ frame on `v`, `dep` = δ rounded e4 (0 for sinks). */
+  private[graft] def brandesReadout(sig: DataFrame, del: DataFrame): DataFrame =
+    sig.join(del, col("v") === col("dv"), "left")
       .select(col("v"), col("level"), col("sigma"),
         round(coalesce(col("delta"), lit(0.0)), 4).as("dep"))
-  }
 
   /** Strongly connected components of a DIRECTED graph — the coloring
     * (forward-backward) BSP algorithm, the standard distributed SCC
@@ -1062,8 +943,7 @@ object GraphOps {
     * family. Returns `(v, scc)` with scc = MAX vertex id of the component.
     */
   def stronglyConnectedComponents(spark: SparkSession, edges: DataFrame,
-      maxRounds: Int = 5, maxIter: Int = 100,
-      broadcastSeenLimit: Long = BroadcastSeenLimit): DataFrame = {
+      maxRounds: Int = 5, maxIter: Int = 100): DataFrame = {
     val e0 = edges.select(col("src").cast("long"), col("dst").cast("long"))
       .distinct().localCheckpoint(true)
     var rem = e0.select(col("src").as("v")).union(e0.select(col("dst").as("v")))
@@ -1072,8 +952,6 @@ object GraphOps {
     var out = List.empty[DataFrame]
     var round = 0
     var remCount = rem.count()
-    def gated(f: DataFrame, n: Long): DataFrame =
-      if (n <= broadcastSeenLimit) broadcast(f) else f.hint("merge")
     while (remCount > 0 && round < maxRounds) {
       // 0. trim pre-pass (the "Trim" of FW-BW-Trim): a vertex with no
       // in-edge or no out-edge in the remaining subgraph cannot lie on a
@@ -2138,10 +2016,10 @@ object GraphOps {
     * and min-cost are the same loop with the ordering flipped and the
     * proposal expression swapped, so sharing it makes the loud
     * non-convergence contract uniform BY CONSTRUCTION instead of by
-    * per-copy discipline). Round shape: merge the improvements into the
-    * state (full-outer `mergeBoth` on the vertex key — the state, the
-    * only full-graph-sized frame, is touched once per round by a
-    * key-local join), then relax TWO cascade hops inside one job (the
+    * per-copy discipline). Round shape: merge the improvements into a
+    * cascade-sized overlay keyed on the vertex (the state, the only
+    * full-graph-sized frame, is touched once per round by a key-local
+    * join), then relax TWO cascade hops inside one job (the
     * expandTwice frontier-doubling discipline applied to label
     * correction: proposals are genuine walk values so they never land on
     * the wrong side of the true label, non-improving candidates are
@@ -2156,7 +2034,7 @@ object GraphOps {
   private def labelCorrectLoop(opName: String, state0: DataFrame,
       seed0: DataFrame, hop: DataFrame => DataFrame,
       pick: Column => Column, better: (Column, Column) => Column,
-      mergeBoth: (Column, Column) => Column, maxIter: Int): DataFrame = {
+      maxIter: Int): DataFrame = {
     val t0 = System.nanoTime()
     // STATE + OVERLAY, not a re-merged label table (r11): the stored
     // state is touched ONCE (checkpointed here, scanned per round); all
@@ -2167,9 +2045,7 @@ object GraphOps {
     // merge needs no value arithmetic at all: a frontier row was
     // filtered strictly-better against the CURRENT view (state ⊕
     // overlay), so on conflict the frontier value simply wins —
-    // anti-join ∪ union, overlay-sized. (`mergeBoth` is retained in the
-    // signature for callers' documentation of merge direction; the
-    // strictly-better filter makes it the identity here.)
+    // anti-join ∪ union, overlay-sized.
     val base = state0.localCheckpoint(true)
     var overlay = seed0.localCheckpoint(true)
     var frontier = overlay
@@ -2252,7 +2128,7 @@ object GraphOps {
       .groupBy(col("hdst").as("v"))
       .agg((min("hl") + 1).cast("int").as("label"))
     val out = labelCorrectLoop("incrementalBfsLevels", state0, seed0, hop,
-      min, _ < _, least(_, _), maxIter)
+      min, _ < _, maxIter)
     e.unpersist()
     out.select(col("v"), col("label").cast("int").as("level"))
   }
@@ -2518,7 +2394,7 @@ object GraphOps {
       .groupBy(col("hdst").as("v"))
       .agg((min("hl") + 1).cast("int").as("label"))
     labelCorrectLoop("incrementalBfsLevelsDelete", state0, seed0, hop,
-      min, _ < _, least(_, _), maxIter)
+      min, _ < _, maxIter)
       .select(col("v"), col("label").cast("int").as("level"))
   }
 
@@ -2573,7 +2449,7 @@ object GraphOps {
       .groupBy(col("hdst").as("v"))
       .agg((max("hl") + 1).as("label"))
     val out = labelCorrectLoop("incrementalDagLayers", state0, seed0, hop,
-      max, _ > _, greatest(_, _), maxIter)
+      max, _ > _, maxIter)
     e.unpersist()
     out.withColumnRenamed("label", "layer")
   }
@@ -2636,7 +2512,7 @@ object GraphOps {
       .groupBy(col("hdst").as("v"))
       .agg((max("hl") + 1).as("label"))
     labelCorrectLoop("incrementalDagLayersDelete", state0, seed0, hop,
-      max, _ > _, greatest(_, _), maxIter)
+      max, _ > _, maxIter)
       .withColumnRenamed("label", "layer")
       .join(edgeUniverse(newEdges), Seq("v"), "left_semi")
   }
@@ -3614,7 +3490,7 @@ object GraphOps {
       .groupBy(col("hdst").as("v"))
       .agg(min(col("hd") + col("hw")).as("label"))
     val out = labelCorrectLoop("incrementalSssp", state0, seed0, hop,
-      min, _ < _, least(_, _), maxIter)
+      min, _ < _, maxIter)
     e.unpersist()
     out.withColumnRenamed("label", "dist")
   }
@@ -3680,7 +3556,7 @@ object GraphOps {
       .groupBy(col("hdst").as("v"))
       .agg(min(col("hd") + col("hw")).as("label"))
     labelCorrectLoop("incrementalSsspDelete", state0, seed0, hop,
-      min, _ < _, least(_, _), maxIter)
+      min, _ < _, maxIter)
       .withColumnRenamed("label", "dist")
   }
 

@@ -282,8 +282,9 @@ class GraphSpec extends SparkSpec {
     }.reduce(_.unionByName(_))
     val multi = GraphOps.multiGraphBfs(spark, edges, 0L).collect()
       .map(r => (r.getString(0), r.getLong(1)) -> r.getInt(2)).toMap
+    // GraphX Pregel is the reference: bfsLevels shares the loop under test
     val single = files.flatMap { f =>
-      GraphOps.bfsLevels(spark, AdjacencyCodec.read(spark, s"$fixtures/$f"), 0L)
+      GraphOps.bfsLevelsPregel(spark, AdjacencyCodec.read(spark, s"$fixtures/$f"), 0L)
         .collect().map(r => (f, r.getLong(0)) -> r.getInt(1))
     }.toMap
     assert(multi == single, "batched multi-graph BFS diverges from per-graph BFS")
@@ -1229,7 +1230,8 @@ class GraphSpec extends SparkSpec {
     val multi = GraphOps.multiSourceBfs(spark, e, seeds).collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getInt(2)).toMap
     seeds.foreach { s =>
-      val single = GraphOps.bfsLevels(spark, e, s).collect()
+      // GraphX Pregel is the reference: bfsLevels shares the loop under test
+      val single = GraphOps.bfsLevelsPregel(spark, e, s).collect()
         .map(r => r.getLong(0) -> r.getInt(1)).toMap
       val slice = multi.collect { case ((`s`, v), l) => v -> l }
       assert(slice == single, s"seed $s")

@@ -158,7 +158,7 @@ class ScaleSpec extends SparkSpec {
     val f = Seq((0L, 0)).toDF("v", "level")
     val seen = Seq((0L, 0)).toDF("v", "level")
     def planOf(seenCount: Long): String =
-      graft.plans.GraphOps.expandTwice(e, f, seen, seenCount, 1000L)
+      graft.plans.GraphOps.expandTwice(e, f, seen, Nil, seenCount, 1000L)
         .queryExecution.executedPlan.toString
     val small = planOf(10L)
     assert(small.matches("(?s).*BroadcastHashJoin.*LeftAnti.*"),
@@ -174,7 +174,7 @@ class ScaleSpec extends SparkSpec {
     val e = Seq(("a", 0L, 1L), ("b", 0L, 2L)).toDF("graph", "src", "dst")
     val f = Seq(("a", 0L, 0), ("b", 0L, 0)).toDF("graph", "v", "level")
     def planOf(seenCount: Long, frontierCount: Long): String =
-      graft.plans.GraphOps.multiGraphExpandTwice(e, f, f, seenCount, 1000L,
+      graft.plans.GraphOps.expandTwice(e, f, f, Seq("graph"), seenCount, 1000L,
         frontierCount).queryExecution.executedPlan.toString
     // the frontier join must key on BOTH graph and vertex — a graph-only
     // key funnels each whole graph through one task at 100 TB
@@ -195,6 +195,23 @@ class ScaleSpec extends SparkSpec {
     assert(!big.toLowerCase.contains("cartesian") &&
       !big.toLowerCase.contains("broadcastnestedloop"),
       s"no nested-loop/cartesian in the superstep:\n${big.take(600)}")
+  }
+
+  test("single-source BFS superstep carries no seed or graph key column") {
+    import spark.implicits._
+    // the keyed superstep serves single-source BFS with keys = Nil: its
+    // plan must group and anti-join on v alone, never on a constant key
+    val e = Seq((0L, 1L), (1L, 2L)).toDF("src", "dst")
+    val f = Seq((0L, 0)).toDF("v", "level")
+    val single = graft.plans.GraphOps.expandTwice(e, f, f, Nil, 10L, 1000L, 10L)
+      .queryExecution.executedPlan.toString
+    val keyCol = "(?s).*\\b(seed|graph)#.*"
+    assert(!single.matches(keyCol),
+      s"keys = Nil must not add a key column:\n${single.take(800)}")
+    val fs = Seq((0L, 0L, 0)).toDF("seed", "v", "level")
+    val seeded = graft.plans.GraphOps.expandTwice(e, fs, fs, Seq("seed"), 10L, 1000L, 10L)
+      .queryExecution.executedPlan.toString
+    assert(seeded.matches(keyCol), s"seed-keyed plan must carry seed:\n${seeded.take(800)}")
   }
 
   test("corpus-sized join sides carry no forced broadcast hint (r5 scale-killers)") {
@@ -350,7 +367,7 @@ class ScaleSpec extends SparkSpec {
     val f = Seq((0L, 0)).toDF("v", "level")
     val seen = Seq((0L, 0)).toDF("v", "level")
     def planOf(frontierCount: Long): String =
-      graft.plans.GraphOps.expandTwice(e, f, seen, 10L, 1000L, frontierCount)
+      graft.plans.GraphOps.expandTwice(e, f, seen, Nil, 10L, 1000L, frontierCount)
         .queryExecution.executedPlan.toString
     // below the gate: the frontier Inner join broadcasts
     val small = planOf(10L)
